@@ -9,16 +9,27 @@ file per micro-batch, and syncs one warm-up batch.  The measured phase
 lands one change file at a time by atomic rename and polls the catalog
 until its commit watermark covers the batch: that interval is the batch's
 freshness, since the engine moves the watermark only after the mirror,
-both exports and the view hold the batch.  A new batch starts only while
-it can end inside ``--seconds``, judged by the batches so far; at least one
-is measured.  Each visible batch is then
-read back through ``MooncakeEngine.sql``.  Every batch changes 100 keys.
+both exports and the view hold the batch.  Each visible batch is then
+read back through ``MooncakeEngine.sql``.
+
+The mirror is backfilled as 16 files, each a range of the primary key,
+so the engine's ``auto`` merge strategy has a choice to make.  The warm-up
+batch is a large one: it changes 1,000 keys spread over the whole table
+and touches every file, which flips ``auto`` to merge-on-read and leaves
+tombstones that the later batches and the reads after the sync have to
+apply.  The measured batches are small: each changes 100 keys of one
+narrow key range and touches one or two base files, plus the file the
+warm-up appended, which the engine merges copy-on-write (with 16 base files
+that stays under the 0.3 share of touched files at which ``auto`` flips).  One batch is always measured; a further one starts only
+while it can end inside ``--seconds``, judged by the batches so far.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import pandas as pd
@@ -48,11 +59,14 @@ MV_SQL = (
     "max(l_extendedprice) AS max_price FROM mirror GROUP BY ALL"
 )
 PK = datagen.LINEITEM_PK
-BATCH_KEYS = 100
-MAX_BATCHES = 40
+MIRROR_FILES = 16
+# (keys, clustered) of the warm-up batch and of each measured batch
+WARMUP_BATCH = (1000, False)
+MEASURED_BATCH = (100, True)
+MAX_BATCHES = 30
 POLL_S = 0.005
 TRIGGER = "100 milliseconds"
-Q1_WARM, Q1_RUNS = 2, 5
+Q1_WARM, Q1_RUNS = 1, 3
 BATCH_TIMEOUT_S = 120.0
 Q1 = (
     "SELECT l_returnflag, l_linestatus, count(*) AS n, "
@@ -62,11 +76,11 @@ Q1 = (
 )
 
 
-def replay(base_path: str, change_paths: list[str], con: duckdb.DuckDBPyConnection) -> None:
+def replay(base_paths: list[str], change_paths: list[str], con: duckdb.DuckDBPyConnection) -> None:
     """Independent replay into DuckDB table ``m``: each change file
     replaces its keys (U, D) and adds its images (I, U), in order."""
-    con.execute(f"CREATE OR REPLACE TABLE m AS SELECT * FROM '{base_path}'")
-    cols = ", ".join(pq.read_schema(base_path).names)
+    con.execute(f"CREATE OR REPLACE TABLE m AS SELECT * FROM read_parquet({base_paths!r})")
+    cols = ", ".join(pq.read_schema(base_paths[0]).names)
     for p in change_paths:
         con.execute(
             f"DELETE FROM m WHERE (l_orderkey, l_linenumber) IN "
@@ -82,6 +96,7 @@ def _bytes_per_row(path: str, history, live_rows: int) -> float:
 
 
 def run(ctx: Ctx) -> Result:
+    from pyspark.sql import DataFrame
     from pyspark.sql import types as T
 
     from pg_mooncake_spark.catalog import SyncCatalog
@@ -100,11 +115,16 @@ def run(ctx: Ctx) -> Result:
     ice, dlt = os.path.join(wh, "_export_iceberg"), os.path.join(wh, "_export_delta")
     for d in (data, staged, feed):
         os.makedirs(d, exist_ok=True)
-    base_path = os.path.join(data, "lineitem.parquet")
-    pq.write_table(base, base_path, row_group_size=base.num_rows)
+    # the backfill source: one file per primary-key range, in key order
+    base_paths = []
+    bounds = [base.num_rows * k // MIRROR_FILES for k in range(MIRROR_FILES + 1)]
+    for k in range(MIRROR_FILES):
+        part = base.slice(bounds[k], bounds[k + 1] - bounds[k])
+        base_paths.append(os.path.join(data, f"lineitem-{k}.parquet"))
+        pq.write_table(part, base_paths[-1], row_group_size=part.num_rows)
+    specs = [WARMUP_BATCH] + [MEASURED_BATCH] * MAX_BATCHES
     batches = datagen.change_batches(
-        ctx.seed, base, MAX_BATCHES, BATCH_KEYS,
-        tables["part"].num_rows, tables["supplier"].num_rows,
+        ctx.seed, base, specs, tables["part"].num_rows, tables["supplier"].num_rows,
     )
     staged_paths = []
     for i, b in enumerate(batches):
@@ -124,7 +144,9 @@ def run(ctx: Ctx) -> Result:
 
     log(ctx, "session up")
     eng = MooncakeEngine(spark, wh)
-    src = spark.read.parquet(base_path)
+    # a union of single-file scans keeps one partition, and so one mirror
+    # file, per key range
+    src = functools.reduce(DataFrame.union, [spark.read.parquet(p) for p in base_paths])
     mt = eng.create_table(MIRROR, source_df=src, primary_key=PK, change_feed=True)
     backfill_bpr = _bytes_per_row(mt.path, mt.history(), base.num_rows)
     log(ctx, "mirror built")
@@ -212,6 +234,9 @@ def run(ctx: Ctx) -> Result:
         fresh.append(f)
         rows += batches[i].table.num_rows
         res.attempted += 1
+        if tracer:
+            # the read-back is not part of the batch's work
+            tracer.op = f"r{i}"
         reads += read_back(i)
         i += 1
     log(ctx, "measured batches done")
@@ -233,20 +258,24 @@ def run(ctx: Ctx) -> Result:
         q1_s.append(time.perf_counter() - t0)
 
     log(ctx, "read_after_sync done")
-    # correctness: replay, exports, views
+    # correctness: replay, exports, views; the reads run concurrently
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
-    replay(base_path, landed, con)
-    want = con.execute("SELECT * FROM m").df()
-    mirror = eng.table(MIRROR).toPandas()
-    res.check(frame_diff(mirror, want, "mirror vs DuckDB replay"))
-    res.check(frame_diff(read_iceberg(spark, ice).toPandas(), mirror, "iceberg export vs mirror"))
-    res.check(frame_diff(read_delta(spark, dlt).toPandas(), mirror, "delta export vs mirror"))
+    with ThreadPoolExecutor(4) as pool:
+        reads_f = {
+            "mirror": pool.submit(lambda: eng.table(MIRROR).toPandas()),
+            "iceberg": pool.submit(lambda: read_iceberg(spark, ice).toPandas()),
+            "delta": pool.submit(lambda: read_delta(spark, dlt).toPandas()),
+            "view": pool.submit(lambda: eng.materialized_view(MV).toPandas()),
+        }
+        replay(base_paths, landed, con)
+        got = {k: f.result() for k, f in reads_f.items()}
+    mirror = got["mirror"]
+    res.check(frame_diff(mirror, con.execute("SELECT * FROM m").df(), "mirror vs DuckDB replay"))
+    res.check(frame_diff(got["iceberg"], mirror, "iceberg export vs mirror"))
+    res.check(frame_diff(got["delta"], mirror, "delta export vs mirror"))
     con.register("mirror", mirror)
-    res.check(frame_diff(
-        eng.materialized_view(MV).toPandas(), con.execute(MV_SQL).df(),
-        f"{MV} vs GROUP BY over mirror",
-    ))
+    res.check(frame_diff(got["view"], con.execute(MV_SQL).df(), f"{MV} vs GROUP BY over mirror"))
     q1_want = con.execute(Q1.replace(f"FROM {MIRROR}", "FROM m")).df()
     res.check(frame_diff(pd.DataFrame([r.asDict() for r in q1_rows]), q1_want, "Q1 over mirror"))
     con.close()
@@ -256,7 +285,7 @@ def run(ctx: Ctx) -> Result:
     loop_s = sum(fresh)
     res.end_to_end = {
         "setup_s": (setup_s, "s"),
-        "write_p50_s": (median(fresh), "s"),
+        "op_p50_s": (median(fresh), "s"),
         "read_p50_s": (median(q1_s), "s"),
     }
     res.detail = {
@@ -294,6 +323,12 @@ def run(ctx: Ctx) -> Result:
         jobs = tracing.read_event_log(log_path)
         values.update(tracing.spark_metrics(jobs, windows))
         values.update(layers.span_metrics(spans, set(windows), n, jobs))
+        # the statement layers are measured on the read-backs, per statement
+        read_ops = {f"r{op[1:]}" for op in windows}
+        values.update({
+            k: v for k, v in layers.span_metrics(spans, read_ops, len(reads), jobs).items()
+            if k.startswith(("sql_router.", "engine.table."))
+        })
         tracer.write(os.path.join(ctx.out, "spans.jsonl"))
         res.per_layer = layers.assemble(values)
     else:

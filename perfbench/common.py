@@ -156,6 +156,17 @@ def frame_diff(got, want, what: str) -> list[str]:
     return []
 
 
+class Collected:
+    """A collected result, in the shape ``tools.diffcheck.compare`` takes
+    (it calls ``toPandas`` on the engine's side)."""
+
+    def __init__(self, df) -> None:
+        self.df = df
+
+    def toPandas(self):  # noqa: N802 - the DataFrame method compare calls
+        return self.df
+
+
 def snapshot(history) -> tuple[set[str], set[str]]:
     """(data files, delete files) of a mirror's latest snapshot, replayed
     from its commit log."""

@@ -7,8 +7,8 @@ headline queries read, plus the key-compacted CDC change files the sync
 workload feeds.  The layout and value domains follow the repository's
 fixture tables (FIXTURES.md): one parquet file and one row group per table,
 ``o_orderdate`` in 1995-01-01..2001-08-01, 25 ``NATION_<k>`` rows over the
-five TPC-H regions, 500 documents over a small vocabulary, 64-dimensional
-unit embeddings.
+five TPC-H regions, documents over a small vocabulary (40 of them, where
+the fixtures have 500), 500 64-dimensional unit embeddings.
 """
 
 from __future__ import annotations
@@ -38,6 +38,10 @@ VOCAB = (
 ).split()
 
 LINEITEM_PK = ["l_orderkey", "l_linenumber"]
+# the DuckDB oracle of the MinHash headline query replays XXH64 in SQL and
+# takes about 3.5 s for 40 documents and 10 s for 200, so the document
+# table stays small
+N_DOCUMENTS = 40
 OP_COL = "__op"
 
 _DAY_US = 86_400 * 1_000_000
@@ -150,7 +154,7 @@ def tpch_tables(seed: int, sf: float, only: Optional[set[str]] = None) -> dict[s
         "value": np.round(rng.exponential(60.0, n_events) + 0.01, 2),
         "props": [json.dumps({"k": int(k)}) for k in rng.integers(0, 100, n_events)],
     })
-    tables["documents"] = _documents(rng, 500)
+    tables["documents"] = _documents(rng, N_DOCUMENTS)
     tables["embeddings"] = _embeddings(rng, 500, 64)
     return tables
 
@@ -206,13 +210,16 @@ class ChangeBatch:
 
 
 def change_batches(
-    seed: int, base: pa.Table, n_batches: int, size: int, n_parts: int, n_supp: int
+    seed: int, base: pa.Table, specs: list[tuple[int, bool]], n_parts: int, n_supp: int
 ) -> list[ChangeBatch]:
-    """``n_batches`` seeded change batches of ``size`` keys each over
-    ``base`` (the lineitem backfill).  Half the keys of a batch
-    are updates of live rows, a quarter deletes of live rows and a
-    quarter inserts of new orders; later batches see the earlier ones'
-    effects, so updates and deletes always hit live keys."""
+    """Seeded change batches over ``base`` (the lineitem backfill), one
+    per ``(keys, clustered)`` spec.  Half the keys of a batch are updates
+    of live rows, a quarter deletes of live rows and a quarter inserts of
+    new orders; later batches see the earlier ones' effects, so updates
+    and deletes always hit live keys.  A clustered batch updates and
+    deletes rows of one narrow key range (a few hundred neighbouring
+    keys, the hot rows of an OLTP table); otherwise the keys are spread
+    over the whole table."""
     rng = np.random.default_rng(seed + 7919)
     cols = base.column_names
     live = {
@@ -221,10 +228,16 @@ def change_batches(
     live_keys = live["l_orderkey"] * 8 + live["l_linenumber"]
     next_order = int(live["l_orderkey"].max()) + 1
     out: list[ChangeBatch] = []
-    for _ in range(n_batches):
+    for size, clustered in specs:
         n_upd, n_del = size // 2, size // 4
         n_ins = size - n_upd - n_del
-        pick = rng.choice(len(live_keys), n_upd + n_del, replace=False)
+        if clustered:
+            by_key = np.argsort(live_keys, kind="stable")
+            span = min(len(by_key), 4 * (n_upd + n_del))
+            lo = int(rng.integers(0, len(by_key) - span + 1))
+            pick = rng.choice(by_key[lo:lo + span], n_upd + n_del, replace=False)
+        else:
+            pick = rng.choice(len(live_keys), n_upd + n_del, replace=False)
         upd_idx, del_idx = pick[:n_upd], pick[n_upd:]
         # updated images: new quantity and price, everything else kept
         upd = {name: live[name][upd_idx].copy() for name in cols}

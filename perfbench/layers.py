@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 from collections import defaultdict
-from typing import Any, Optional
+from typing import Any
 
 from perfbench import tracing
 from perfbench.common import bytes_written, median, snapshot
@@ -69,24 +69,26 @@ OTHER = [
     ("session.py_peak_rss_mb", "MB"),
     ("trace.op_p50_s", "s"),
     ("trace.apply_s", "s/op"),
-    ("trace.layers_self_s", "s/op"),
     ("trace.spans", "count"),
 ]
 
 
-def query_spec(keys: list[str]) -> list[tuple[str, str]]:
-    """Per-query metrics of the olap_headline workload."""
-    out = []
-    for k in keys:
-        out += [(f"query.{k}.s", "s"), (f"query.{k}.jobs", "1/op")]
-    return out
+def headline() -> list[str]:
+    """The headline query keys of ``bench.py``."""
+    import bench
+
+    return list(bench.HEADLINE)
 
 
 def per_layer_spec() -> list[tuple[str, str]]:
     spans = []
     for t, c in SPAN_LAYERS.values():
         spans += [(t, "s/op"), (c, "1/op")]
-    return SPARK + spans + OTHER
+    # median time and Spark jobs of each headline query (olap_headline)
+    queries = []
+    for k in headline():
+        queries += [(f"query.{k}.s", "s"), (f"query.{k}.jobs", "1/op")]
+    return SPARK + spans + OTHER + queries
 
 
 def span_metrics(
@@ -120,10 +122,10 @@ def span_metrics(
     for kind in ("select", "update", "delete", "insert"):
         xs = [s["end"] - s["start"] for s in sql if s["name"] == f"sql_router.sql.{kind}"]
         out[f"sql_router.sql.{kind}.s"] = median(xs) if xs else 0.0
-    roots = {s["id"] for s in mine if s["name"] == "engine.apply_changes" and s["parent"] is None}
-    tree = tracing.descendants(mine, roots)
-    out["trace.apply_s"] = sum(s["end"] - s["start"] for s in mine if s["id"] in roots) / n
-    out["trace.layers_self_s"] = sum(selfs[s["id"]] for s in tree) / n
+    out["trace.apply_s"] = sum(
+        s["end"] - s["start"] for s in mine
+        if s["name"] == "engine.apply_changes" and s["parent"] is None
+    ) / n
     out["trace.spans"] = len(spans)
     return out
 
@@ -132,15 +134,16 @@ def storage_values(
     tables: list[Any], before: dict[str, int], after: dict[str, int], since: float, n: int
 ) -> dict[str, float]:
     """Storage-layer counts of the mirrors ``tables`` (MoonTables) from
-    their commit logs and the files under them: commits and rewrites of
-    the measured phase (commits stamped at or after ``since``), bytes
-    written per op, and the snapshot the run left."""
+    their commit logs and the files under them: copy-on-write and
+    merge-on-read commits over the whole run, warm-up included; files
+    rewritten and bytes written per op of the measured phase (commits
+    stamped at or after ``since``); and the snapshot the run left."""
     out: dict[str, float] = defaultdict(float)
     for mt in tables:
         hist = mt.history()
         measured = [c for c in hist if c.ts >= since]
-        out["storage.cow_commits"] += sum(1 for c in measured if c.remove and not c.deletes)
-        out["storage.mor_commits"] += sum(1 for c in measured if c.deletes)
+        out["storage.cow_commits"] += sum(1 for c in hist if c.remove and not c.deletes)
+        out["storage.mor_commits"] += sum(1 for c in hist if c.deletes)
         out["storage.files_rewritten"] += sum(len(c.remove) for c in measured) / n
         out["storage.bytes_written"] += bytes_written(before, after, mt.path + os.sep) / n
         files, dels = snapshot(hist)
@@ -149,11 +152,6 @@ def storage_values(
     return out
 
 
-def assemble(
-    values: dict[str, float], extra: Optional[list[tuple[str, str]]] = None
-) -> dict[str, tuple[float, str]]:
+def assemble(values: dict[str, float]) -> dict[str, tuple[float, str]]:
     """Every per-layer metric with its unit; missing ones read 0."""
-    return {
-        name: (float(values.get(name, 0.0)), unit)
-        for name, unit in per_layer_spec() + (extra or [])
-    }
+    return {name: (float(values.get(name, 0.0)), unit) for name, unit in per_layer_spec()}

@@ -2,7 +2,7 @@
 """Benchmark of pg_mooncake_spark: the sync path, the SQL statement path
 and the query path.
 
-    python3 perfbench/run.py --workload cdc_sync --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload cdc_sync --seed 1 --seconds 10 --trace 0
 
 Run from the repository root.  Workloads (``perfbench/README.md`` says what
 each measures and why):

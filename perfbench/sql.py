@@ -259,7 +259,7 @@ def run(ctx: Ctx) -> Result:
     every = lat["write"] + lat["point"] + lat["analytic"]
     res.end_to_end = {
         "setup_s": (setup_s, "s"),
-        "write_p50_s": (median(lat["write"]), "s"),
+        "op_p50_s": (median(lat["write"]), "s"),
         "read_p50_s": (median(lat["point"]), "s"),
     }
     res.detail = {

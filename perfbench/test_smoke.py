@@ -5,7 +5,7 @@
 Runs every workload for one second at the smallest scale, checks that each
 prints the metrics ``BENCHMARK.json`` names (and the per-layer set in a
 traced run), and that the output checks fire on a corrupted result.  Takes
-about five minutes on 4 cores.
+about seven minutes on 4 cores.
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from perfbench import layers  # noqa: E402
-from perfbench.common import frame_diff  # noqa: E402
+from perfbench.common import Collected, frame_diff  # noqa: E402
 from perfbench.sql import same_rows  # noqa: E402
 
 with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -59,19 +59,25 @@ def test_workload_prints_every_metric(workload):
     assert detail["workload_metrics"]["failed_frac"]["value"] == 0
     env = detail["environment"]
     assert {"nproc", "spark", "duckdb", "loadavg_before", "loadavg_after"} <= set(env)
-    if workload in {w["name"] for w in SPEC["workloads"]}:
-        want = {m["name"]: m["unit"] for m in SPEC["end_to_end"]}
-        got = {k: v["unit"] for k, v in result["metrics"].items()}
-        assert got == want
-        assert all(v["value"] > 0 for v in result["metrics"].values())
+    want = {m["name"]: m["unit"] for m in SPEC["end_to_end"]}
+    got = {k: v["unit"] for k, v in result["metrics"].items()}
+    assert got == want
+    assert all(v["value"] > 0 for v in result["metrics"].values())
 
 
-def test_traced_run_prints_every_layer_metric():
-    detail, result = bench("sql_mixed", trace=1)
+@pytest.mark.parametrize("workload", ["cdc_sync", "sql_mixed"])
+def test_traced_run_prints_every_layer_metric(workload):
+    detail, result = bench(workload, trace=1)
     want = {m["name"]: m["unit"] for m in SPEC["per_layer"]}
     assert {k: v["unit"] for k, v in result["metrics"].items()} == want
     assert want == dict(layers.per_layer_spec())
     assert os.path.getsize(detail["spans"]) > 0
+    if workload == "cdc_sync":
+        # the large warm-up batch merges merge-on-read, the small ones
+        # copy-on-write
+        m = {k: v["value"] for k, v in result["metrics"].items()}
+        assert m["storage.cow_commits"] >= 1 and m["storage.mor_commits"] >= 1
+        assert m["storage.delete_files_end"] >= 1
 
 
 def test_frame_check_fires_on_corruption():
@@ -94,13 +100,6 @@ def test_statement_check_fires_on_corruption():
 
 def test_oracle_check_fires_on_corruption():
     from tools.diffcheck import compare
-
-    class Collected:
-        def __init__(self, df):
-            self.df = df
-
-        def toPandas(self):  # noqa: N802 - the DataFrame method compare calls
-            return self.df
 
     want = pd.DataFrame({"k": [1, 2], "n": [10, 20]})
     assert compare(Collected(want.copy()), want, "same") == []

@@ -130,19 +130,6 @@ def self_times(spans: list[dict[str, Any]]) -> dict[int, float]:
     return {s["id"]: (s["end"] - s["start"]) - child[s["id"]] for s in spans}
 
 
-def descendants(spans: list[dict[str, Any]], root_ids: set[int]) -> list[dict[str, Any]]:
-    by_parent = defaultdict(list)
-    for s in spans:
-        by_parent[s["parent"]].append(s)
-    out, todo = [], list(root_ids)
-    by_id = {s["id"]: s for s in spans}
-    while todo:
-        sid = todo.pop()
-        out.append(by_id[sid])
-        todo.extend(c["id"] for c in by_parent[sid])
-    return out
-
-
 def read_event_log(path: str) -> dict[int, dict[str, Any]]:
     """Jobs from an uncompressed Spark event log: id -> group, submit
     and end time (epoch seconds), stage and task counts, and summed task
